@@ -6,7 +6,6 @@ from data_management_service_run_etl_imputations_spark.sources.readers import (
     union_param_sweep,
 )
 from data_management_service_run_etl_imputations_spark.sources.sinks import (
-    append_sink,
     incremental_insert_only,
 )
 
@@ -16,6 +15,5 @@ __all__ = [
     "jdbc_source",
     "parquet_source",
     "union_param_sweep",
-    "append_sink",
     "incremental_insert_only",
 ]

@@ -551,11 +551,11 @@ def _native_read_frame(spark, path: str, version: int):
     bound snapshot, or ``None`` when the snapshot needs the Python
     DataSource. Taken only when results are PROVABLY byte-identical:
     parquet format, no pending merge-on-read deletes, no column mapping,
-    and every live directory's schema equals the table schema (so no
-    executor-side null-fill/up-cast is ever needed), with the whole
-    snapshot at most ``$MANIFEST_SQL_NATIVE_READ_MAX_FILES`` (default
-    64) files — the dimension-table shape, where plan-time partition
-    pruning cannot pay for Python scan tasks. Snapshot isolation is
+    and every live directory has a recorded schema equal to the table
+    schema (so no executor-side null-fill/up-cast is ever needed), with
+    the whole snapshot at most ``$MANIFEST_SQL_NATIVE_READ_MAX_FILES``
+    (default 64) files — the dimension-table shape, where plan-time
+    partition pruning cannot pay for Python scan tasks. Snapshot isolation is
     preserved by construction: the file list is resolved here, once,
     and baked into the plan."""
     import json
@@ -607,8 +607,9 @@ def _native_read_frame(spark, path: str, version: int):
     schema = StructType.fromJson(json.loads(schema_json))
     want = schema.simpleString()
     dir_schemas = content.get("dir_schemas", {})
-    live = _live_dirs(content)
-    if any(dir_schemas.get(d, want) != want for d in live):
+    # a live dir without a recorded schema is not PROVEN to match (a
+    # manifest from before per-dir schemas may predate an evolution)
+    if any(dir_schemas.get(d) != want for d in _live_dirs(content)):
         return None  # evolved table: old dirs need null-fill — DS path
     files = content.get("files", {})
     rels = [
@@ -896,20 +897,6 @@ class _AppendMessage(WriterCommitMessage):
     entries: "list" = _dc_field(default_factory=list)
 
 
-def _escape_part_component(v: str) -> str:
-    """Filesystem-safe partition-dir component. Internal naming only:
-    modern-protocol readers resolve files through the manifest's
-    explicit (key → files) lists and never parse directory names, so
-    this only has to be collision-free and portable."""
-    out = []
-    for ch in v:
-        if ch.isalnum() or ch in ("-", "_", "."):
-            out.append(ch)
-        else:
-            out.append("".join(f"%{b:02X}" for b in ch.encode("utf-8")))
-    return "".join(out) or "__empty__"
-
-
 class ManifestAppendWriter(DataSourceArrowWriter):
     def __init__(self, schema, options, overwrite: bool):
         import json
@@ -1021,8 +1008,10 @@ class ManifestAppendWriter(DataSourceArrowWriter):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        from data_management_service_run_etl_imputations_spark.sources.partition_codec import (
+            dir_component,
+        )
         from data_management_service_run_etl_imputations_spark.sources.sinks import (
-            _part_key,
             _part_key_tuple,
         )
 
@@ -1048,15 +1037,11 @@ class ManifestAppendWriter(DataSourceArrowWriter):
             for k, idxs in idx_by_key.items():
                 by_part.setdefault(k, []).append(t.take(idxs))
                 if k not in dir_of:
-                    comps = [
-                        f"__p{j}={_escape_part_component(_part_key(v))}"
-                        if len(self.pcols) > 1
-                        else f"__p={_escape_part_component(_part_key(v))}"
-                        for j, v in enumerate(
-                            [pvals[j][idxs[0]] for j in range(len(self.pcols))]
-                        )
-                    ]
-                    dir_of[k] = "/".join(comps)
+                    dir_of[k] = "/".join(
+                        f"__p{j if len(self.pcols) > 1 else ''}="
+                        + dir_component(pvals[j][idxs[0]])
+                        for j in range(len(self.pcols))
+                    )
         entries = []
         for k, tables in by_part.items():
             t = pa.concat_tables(tables)
@@ -1256,73 +1241,45 @@ class ManifestAppendWriter(DataSourceArrowWriter):
 # ``ManifestAppendWriter`` DRIVER-SIDE (same validation, same stage
 # layout, same commit-conflict loop, same history record) and stages
 # the rows with Spark's native parquet writer — the identical staging
-# mechanism every Python engine (``sinks._stage_and_commit``) already
+# mechanism every Python engine (``sinks._stage_partitions``) already
 # uses on the same tables. The public DataSource writer path is
 # untouched for direct ``df.write.format("manifest")`` users.
 
-# Partition-column types whose manifest key is PROVABLY identical under
-# the DataSource writer's Python-side str(value) and the staged-dir
-# convention's CAST(col AS STRING) + dir-name unescape: ints/strings/
-# dates format identically in both engines (and NULL maps to
-# NULL_PARTITION_KEY on both). Types with cross-engine formatting
-# drift (boolean 'True' vs 'true', float repr, timestamp tz) keep the
-# Python writer so keys stay byte-identical with prior commits.
-_FAST_KEY_TYPES = frozenset(
-    ("string", "int", "bigint", "smallint", "tinyint", "date")
-)
-
 
 def _fast_staged_append(df, path: str, options: dict, overwrite: bool) -> bool:
-    """Stage ``df`` under the writer's immutable ``data/<uuid>`` prefix
-    with the JVM parquet writer, then publish through
+    """Stage ``df`` under an immutable ``data/<uuid>`` prefix with the
+    JVM parquet writer, then publish through
     ``ManifestAppendWriter.commit`` in-process. Returns ``False`` when a
-    partition-column type is outside the key-identical set (the caller
-    falls back to the DataSource writer); validation errors raise
-    exactly as the writer's plan-time construction would."""
-    import os
-
-    from data_management_service_run_etl_imputations_spark.session import (
-        ensure_runtime_confs,
+    partition-column type has no partition-key encoding
+    (``partition_codec.KEY_TYPES``; the caller falls back to the
+    DataSource writer); validation errors raise exactly as the writer's
+    plan-time construction would."""
+    from data_management_service_run_etl_imputations_spark.sources.partition_codec import (
+        KEY_TYPES,
     )
     from data_management_service_run_etl_imputations_spark.sources.sinks import (
-        _part_copy_cols,
-        _staged_partition_dirs,
-        _with_part_copies,
+        _stage_partitions,
     )
 
     w = ManifestAppendWriter(df.schema, options, overwrite)
-    type_of = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    if any(type_of.get(c) not in _FAST_KEY_TYPES for c in w.pcols):
+    if not all(isinstance(df.schema[c].dataType, KEY_TYPES) for c in w.pcols):
         return False
-    # an injected vanilla session would otherwise write INT96 timestamps
-    ensure_runtime_confs(df.sparkSession)
-    stage_abs = os.path.join(path, *w.stage.split("/"))
+    staged = _stage_partitions(
+        path, df, w.pcols, op="dynamic-overwrite" if overwrite else "append"
+    )
+    w.stage = staged.stage
+    # an empty write stays the same no-op — no files, no commit, no
+    # version — as the Python writer, whose tasks skip empty batches
+    entries = [
+        (k, rel, size, rows)
+        for k, (_d, file_entries) in staged.parts.items()
+        for rel, size, rows in file_entries
+    ]
     try:
-        if w.pcols:
-            (
-                _with_part_copies(df, w.pcols)
-                .write.partitionBy(*_part_copy_cols(w.pcols))
-                .parquet(stage_abs)
-            )
+        if entries:
+            w.commit([_AppendMessage(entries=entries)])
         else:
-            df.write.parquet(stage_abs)
-        written = _staged_partition_dirs(
-            path, w.stage, "parquet", len(w.pcols)
-        )
-        # 0-row files (schema-only artifacts of an empty unpartitioned
-        # write) are dropped so an empty INSERT stays the same no-op —
-        # no files, no commit, no version — as the Python writer, whose
-        # tasks skip empty batches
-        entries = [
-            (k, rel, size, rows)
-            for k, (_d, file_entries) in written.items()
-            for rel, size, rows in file_entries
-            if rows != 0
-        ]
-        if not entries:
             w.abort([])
-            return True
-        w.commit([_AppendMessage(entries=entries)])
     except BaseException:
         w.abort([])
         raise

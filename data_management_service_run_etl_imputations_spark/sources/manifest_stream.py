@@ -545,6 +545,10 @@ def _read_cdf_partition(p: "_CdfPartition"):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from data_management_service_run_etl_imputations_spark.sources.sinks import (
+        _stage_of,
+    )
+
     target = pa.ipc.read_schema(pa.BufferReader(p.arrow_schema_bytes))
     names = [f.name for f in target]
     delete_keys_cache: dict[str, pd.DataFrame] = {}
@@ -575,7 +579,7 @@ def _read_cdf_partition(p: "_CdfPartition"):
             df = pa.table(cols, schema=target).to_pandas().reset_index(
                 drop=True
             )
-            stage = rel.split("/__p")[0]
+            stage = _stage_of(rel)
             # POSITIONAL masks first: row_index refers to the PHYSICAL
             # row order of the file, which is exactly the frame's index
             # right now (whole-file read, 0..n-1) and stops being so the

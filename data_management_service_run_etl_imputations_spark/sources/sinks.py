@@ -9,8 +9,18 @@ Re-runs are idempotent by construction.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_management_service_run_etl_imputations_spark.sources import (
+    partition_codec as codec,
+)
+from data_management_service_run_etl_imputations_spark.sources.partition_codec import (
+    NULL_PARTITION_KEY,
+    part_key as _part_key,
+)
 
 
 def incremental_new_rows(
@@ -42,14 +52,6 @@ def incremental_new_rows(
         c = incoming[k].eqNullSafe(F.col(f"__ex_{k}"))
         cond = c if cond is None else cond & c
     return incoming.join(existing_keys, cond, "left_anti")
-
-
-def append_sink(df: DataFrame, path: str, fmt: str = "parquet", **options) -> None:
-    """S6 — append with create-if-absent (reference: ``inspect().has_table``
-    + ``to_sql(if_exists='append')``, ``function_app.py:296-301``). Spark's
-    append mode creates the target on first write, so the existence probe
-    disappears."""
-    df.write.mode("append").format(fmt).options(**options).save(path)
 
 
 def jdbc_append_sink(
@@ -148,136 +150,13 @@ def incremental_insert_only(
     return n
 
 
-def merge_upsert(
-    incoming: DataFrame,
-    path: str,
-    keys: list[str],
-    fmt: str = "parquet",
-) -> dict[str, int]:
-    """Full upsert (UPDATE existing keys + INSERT new ones) against a
-    path-backed table — the engine's superset of the reference's
-    insert-only S7 for users who need updates.
-
-    Rendering without a transactional format: existing rows whose key is
-    NOT in the batch survive (null-safe anti-join), the whole batch wins
-    for its keys, and the union rewrites the target. At scale, on plain
-    parquet, restrict the rewrite with partition-overwrite
-    (``partitionOverwriteMode=dynamic``) or use Delta/Iceberg MERGE —
-    rewrite-all is the correctness baseline, not the 100 TB path.
-    Returns {"updated": n, "inserted": n}.
-    """
-    spark = incoming.sparkSession
-    try:
-        existing = spark.read.format(fmt).load(path)
-    except Exception:
-        existing = None
-
-    if existing is None:
-        n = incoming.count()
-        incoming.write.mode("overwrite").format(fmt).save(path)
-        return {"updated": 0, "inserted": n}
-
-    untouched = incremental_new_rows(existing, incoming, keys)
-    merged = untouched.unionByName(incoming.select(*existing.columns)).cache()
-    total = merged.count()
-    n_untouched = untouched.count()
-    n_existing = existing.count()
-    # Rewrite via a temp location: the plan reads the target path, so an
-    # in-place overwrite would clobber its own input mid-job.
-    tmp = path + "__rewrite"
-    merged.write.mode("overwrite").format(fmt).save(tmp)
-    merged.unpersist()
-    import shutil
-
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
-    n_updated = n_existing - n_untouched
-    return {"updated": n_updated, "inserted": total - n_untouched - n_updated}
-
-
-def merge_upsert_partitioned(
-    incoming: DataFrame,
-    path: str,
-    keys: list[str],
-    partition_col: str,
-    fmt: str = "parquet",
-) -> dict[str, int]:
-    """Upsert against a PARTITIONED path-backed table, rewriting only the
-    partitions the batch touches — the 100 TB rendering of
-    :func:`merge_upsert` (which rewrites the whole target and exists as the
-    correctness baseline).
-
-    Mechanics: ``spark.sql.sources.partitionOverwriteMode=dynamic`` makes an
-    overwrite replace exactly the partitions present in the written frame.
-    We write (existing rows of touched partitions that lose to the batch ∪
-    the batch), so untouched partitions are never read past their key
-    projection and never rewritten — a daily upsert over a date-partitioned
-    fact touches |batch dates| directories no matter how large the table is.
-    ``partition_col`` must be one of ``keys``' functional dependents (a row's
-    partition value may not change across versions; enforced by construction
-    here since the batch row wins wholesale).
-
-    The merged frame is ``localCheckpoint``-ed before the write: the write
-    job would otherwise read the same files its commit replaces (Spark
-    rejects self-overwrite lineage). Checkpoint size ∝ touched partitions,
-    not the table.
-
-    VISIBILITY CAVEAT: the overwrite's commit phase replaces touched
-    partition directories one by one, so a concurrent reader scanning
-    during it can observe a mix of old and new partitions. Use
-    :func:`manifest_upsert_partitioned` when concurrent readers exist —
-    same partition-level rewrite economics, atomic manifest-rename
-    visibility.
-
-    Returns {"updated": n, "inserted": n}.
-    """
-    spark = incoming.sparkSession
-    try:
-        existing = spark.read.format(fmt).load(path)
-    except Exception:
-        existing = None
-
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(mode_key, "static")
-    if existing is None:
-        n = incoming.count()
-        incoming.write.mode("overwrite").partitionBy(partition_col).format(
-            fmt
-        ).save(path)
-        return {"updated": 0, "inserted": n}
-
-    # Static partition pruning: the touched-partition list is collected at
-    # plan time (bounded by the partition count of the batch — the same
-    # budget as a broadcast) so the existing-side scan prunes directories.
-    touched = [
-        r[0] for r in incoming.select(partition_col).distinct().collect()
-    ]
-    existing_touched = existing.filter(F.col(partition_col).isin(touched))
-    survivors = incremental_new_rows(existing_touched, incoming, keys)
-    merged = survivors.unionByName(
-        incoming.select(*existing.columns)
-    ).localCheckpoint()
-    n_survivors = survivors.count()
-    n_existing_touched = existing_touched.count()
-    n_batch = merged.count() - n_survivors
-    try:
-        spark.conf.set(mode_key, "dynamic")
-        merged.write.mode("overwrite").partitionBy(partition_col).format(
-            fmt
-        ).save(path)
-    finally:
-        spark.conf.set(mode_key, prev_mode)
-    n_updated = n_existing_touched - n_survivors
-    return {"updated": n_updated, "inserted": n_batch - n_updated}
-
-
 # --- manifest-committed partitioned table (atomic upsert) -----------------
 #
-# merge_upsert_partitioned above rewrites live partition directories with
-# dynamic partition overwrite: correct for a single writer, but a reader
-# scanning DURING the commit phase can observe some partitions new and some
-# old. The manifest table fixes that with the core idea of every
-# transactional table format (Delta's _delta_log, Iceberg's snapshots):
+# Rewriting live partition directories in place (dynamic partition
+# overwrite) is correct for a single writer, but a reader scanning DURING
+# the commit phase can observe some partitions new and some old. The
+# manifest table fixes that with the core idea of every transactional
+# table format (Delta's _delta_log, Iceberg's snapshots):
 #
 #   - data directories are IMMUTABLE — an upsert writes rewritten
 #     partitions into a fresh staging dir, never touching live files;
@@ -1618,63 +1497,21 @@ def manifest_read_where(
     return _apply_deletes(spark, path, df, content).filter(condition)
 
 
-def _stage_of(rel_dir: str) -> str:
-    """Stage prefix of a partition directory (``data/<uuid>``) — the unit
-    of immutability: every directory in a stage was written by one
-    commit. Splits on the first partition-copy level (``/__p=`` single,
-    ``/__p0=`` multi)."""
-    return rel_dir.split("/__p")[0]
-
-
-# Characters Spark's dynamic-partition writer percent-escapes in partition
-# directory names (ExternalCatalogUtils.escapePathName): constructing
-# ``__p={value}`` by hand for such a value names a directory the write
-# never created — the listing comes back empty and the partition would be
-# silently dropped as "emptied". All staged-dir resolution therefore goes
-# through _staged_partition_dirs (list what Spark ACTUALLY wrote and
-# unescape), never through name construction.
-_ESCAPED_CHARS = set('"#%\'*/:=?\\\x7f{[]^')
-
-
-def _unescape_part_dir(name: str) -> str:
-    """Inverse of Spark's escapePathName: decode ``%XX`` sequences in a
-    partition directory component back to the raw partition value."""
-    out: list[str] = []
-    i = 0
-    while i < len(name):
-        c = name[i]
-        if c == "%" and i + 3 <= len(name):
-            try:
-                out.append(chr(int(name[i + 1 : i + 3], 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-# Spark's sentinel directory for a NULL dynamic-partition value; the
-# manifest uses the same string as the partition KEY so null-partitioned
-# rows round-trip (str(None) == "None" would name a dir the writer never
-# created).
-NULL_PARTITION_KEY = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _part_key(value) -> str:
-    """Manifest partition key for a partition-column value."""
-    return NULL_PARTITION_KEY if value is None else str(value)
+def _stage_of(rel: str) -> str:
+    """Stage prefix (``data/<uuid>``) of a data directory or file — the
+    unit of immutability: everything in a stage was written by one
+    commit."""
+    return "/".join(rel.split("/", 2)[:2])
 
 
 # --- multi-column partitioning ---------------------------------------------
 #
 # A table may partition on SEVERAL columns (the real 100 TB shape:
 # (date, source) at least). Layout: Spark's native nested dynamic
-# partitioning — staged dirs are ``__p0=<v0>/__p1=<v1>/...`` (copies of
-# the partition columns, escaped by Spark) — and the manifest partition
-# KEY is the canonical JSON array of the per-component keys,
-# ``["2024-01-01","web"]``, produced ONLY driver-side (never by a Spark
+# partitioning — staged dirs are ``__p0=<v0>/__p1=<v1>/...`` (copies
+# of the partition columns, encoded by ``partition_codec``) — and the
+# manifest partition KEY is the canonical JSON array of the per-component
+# keys, ``["2024-01-01","web"]``, produced ONLY driver-side (never by a Spark
 # expression, so no cross-engine JSON-formatting drift). Single-column
 # tables keep the original ``__p=<v>`` dirs and raw-string keys — fully
 # back-compatible; multi-partitioned tables stamp reader protocol 2.
@@ -1734,69 +1571,137 @@ def _normalize_partition_value(v, pcols: list[str]) -> str:
     return _part_key_tuple(v, pcols)
 
 
-def _part_copy_cols(pcols: list[str]) -> list[str]:
-    """Names of the staged COPY columns (``__p`` single, ``__pN``
-    multi)."""
-    if len(pcols) == 1:
-        return ["__p"]
-    return [f"__p{i}" for i in range(len(pcols))]
+@dataclass
+class _Staged:
+    """What one staged write put on disk: the stage prefix, the data
+    schema, and per manifest key the directory and its non-empty files
+    (``{key: (rel_dir, [[file_rel, size, rows], ...])}``)."""
+
+    stage: str
+    schema: str
+    parts: dict
 
 
-def _with_part_copies(df: DataFrame, pcols: list[str]) -> DataFrame:
-    for name, c in zip(_part_copy_cols(pcols), pcols):
-        df = df.withColumn(name, F.col(c).cast("string"))
-    return df
-
-
-def _staged_partition_dirs(
-    path: str, stage: str, fmt: str, n_levels: int = 1
-) -> dict[str, tuple[str, list]]:
-    """The partition directories Spark ACTUALLY wrote under a staged
-    ``data/<uuid>`` prefix: ``{partition_key: (rel_dir, file_entries)}``
-    keyed by the UNESCAPED partition value (single level) or the
-    canonical JSON array of unescaped components (``n_levels > 1``).
-    This is the data-authoritative presence test for a staged write — a
-    partition absent here was truly written zero rows (Spark creates the
-    escaped dirs only when a task emitted rows for them), whereas
-    constructing dir names from raw values mistakes any escaped
-    character for an emptied partition."""
+def _stage_partitions(
+    path: str,
+    df: DataFrame,
+    pcols: list[str],
+    fmt: str = "parquet",
+    keys=None,
+    op: str = "write",
+    layout=None,
+) -> _Staged:
+    """The one JVM-staged write: partition ``df`` on codec-encoded copies
+    of ``pcols`` into a fresh immutable ``data/<uuid>`` stage, then list
+    and decode what Spark ACTUALLY wrote — a key absent from the result
+    had zero rows. ``layout(frame, copy_names)`` is the caller's
+    repartition / sort / checkpoint over the frame with copies; it must
+    keep the columns. ``keys`` arms the stray-key guard: staged data
+    under any other key is a loud error, never silently committed.
+    Files with zero rows (an empty unpartitioned write) are dropped. On
+    any failure the stage is removed."""
     import json
     import os
+    import shutil
+    import uuid
 
-    out: dict[str, tuple[str, list]] = {}
+    from data_management_service_run_etl_imputations_spark.session import (
+        ensure_runtime_confs,
+    )
+
+    types = {c: df.schema[c].dataType for c in pcols}
+    bad = {
+        c: t.simpleString()
+        for c, t in types.items()
+        if not isinstance(t, codec.KEY_TYPES)
+    }
+    if bad:
+        raise ValueError(
+            f"{op} at {path}: partition column type(s) {bad} have no "
+            "partition-key encoding"
+        )
+    # an injected vanilla session would otherwise write INT96 timestamps
+    # (no parquet column statistics -> footer ANALYZE degrades to a scan)
+    ensure_runtime_confs(df.sparkSession)
+    stage = f"data/{uuid.uuid4().hex[:12]}"
     root = os.path.join(path, *stage.split("/"))
-    if not os.path.isdir(root):
-        return out
-    if n_levels == 0:
-        # UNPARTITIONED table: Spark staged flat files directly under the
-        # stage dir (partitionBy() with zero columns); the whole stage is
-        # the single synthetic partition keyed "[]"
-        entries = _list_dir_files(path, stage, fmt)
-        if entries:
-            out["[]"] = (stage, entries)
-        return out
+    schema = df.schema.simpleString()
+    # partitionBy on COPIES: the real columns stay in the data files, so
+    # readers never depend on directory-name parsing
+    copies = (
+        ["__p"] if len(pcols) == 1 else [f"__p{i}" for i in range(len(pcols))]
+    )
+    frame = df
+    for name, c in zip(copies, pcols):
+        frame = frame.withColumn(name, codec.copy_column(c, types[c]))
+    if layout is not None:
+        frame = layout(frame, copies)
+    try:
+        frame.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
+            root
+        )
+        parts: dict = {}
 
-    def walk(d: str, rel: str, comps: list[str], level: int) -> None:
-        prefix = "__p=" if n_levels == 1 else f"__p{level}="
-        for name in sorted(os.listdir(d)):
-            if not name.startswith(prefix):
-                continue
-            comp = _unescape_part_dir(name[len(prefix) :])
-            sub_rel = f"{rel}/{name}"
-            if level + 1 == n_levels:
-                key = (
-                    comp
-                    if n_levels == 1
-                    else json.dumps([*comps, comp], separators=(",", ":"))
-                )
-                out[key] = (sub_rel, _list_dir_files(path, sub_rel, fmt))
-            else:
-                walk(
-                    os.path.join(d, name), sub_rel, [*comps, comp], level + 1
-                )
+        def walk(rel: str, comps: list) -> None:
+            level = len(comps)
+            if level == len(pcols):
+                entries = [
+                    e for e in _list_dir_files(path, rel, fmt) if e[2] != 0
+                ]
+                if entries:
+                    key = comps[0] if len(pcols) == 1 else json.dumps(
+                        comps, separators=(",", ":")
+                    )
+                    parts[key] = (rel, entries)
+                return
+            prefix = f"{copies[level]}="
+            dtype = types[pcols[level]]
+            for name in sorted(os.listdir(os.path.join(path, *rel.split("/")))):
+                if name.startswith(prefix):
+                    comp = codec.decode_dir(name[len(prefix) :], dtype)
+                    walk(f"{rel}/{name}", [*comps, comp])
 
-    walk(root, stage, [], 0)
-    return out
+        if os.path.isdir(root):
+            walk(stage, [])
+        stray = set(parts) - set(keys) if keys is not None else set()
+        if stray:
+            raise RuntimeError(
+                f"{op} at {path} staged partition(s) {sorted(stray)[:3]} "
+                "outside the keys it was given — partition-key mapping bug"
+            )
+    except BaseException:
+        shutil.rmtree(root, ignore_errors=True)
+        raise
+    return _Staged(stage, schema, parts)
+
+
+def _repoint(content: dict, staged: _Staged, keys, carry=None) -> dict:
+    """New ``partitions`` / ``files`` / ``dir_schemas`` after pointing
+    each of ``keys`` at its staged files, next to the entries ``carry``
+    keeps by reference. A key with neither drops out; ``dir_schemas``
+    records every staged dir and forgets dirs no longer live."""
+    parts = dict(content.get("partitions", {}))
+    files = dict(content.get("files", {}))
+    dir_schemas = dict(content.get("dir_schemas", {}))
+    carry = carry or {}
+    for k in keys:
+        carried = list(carry.get(k, []))
+        if k in staged.parts:
+            rel, entries = staged.parts[k]
+            parts[k] = rel
+            files[k] = [*carried, *entries]
+            dir_schemas[rel] = staged.schema
+        elif carried:
+            files[k] = carried
+        else:
+            parts.pop(k, None)
+            files.pop(k, None)
+    live = _live_dirs({"partitions": parts, "files": files})
+    return {
+        "partitions": parts,
+        "files": files,
+        "dir_schemas": {d: sc for d, sc in dir_schemas.items() if d in live},
+    }
 
 
 def _live_dirs(content: dict) -> set[str]:
@@ -1880,7 +1785,9 @@ def _apply_deletes(
                     == F.col(f"__pk_{i}_name")
                 )
                 & (F.col(_POS_IDX) == F.col(f"__pk_{i}_pos"))
-                & F.col(_POS_FILE).endswith(F.col(f"__pk_{i}_rel"))
+                & codec.scan_path(F.col(_POS_FILE)).endswith(
+                    F.col(f"__pk_{i}_rel")
+                )
             )
             out = out.join(pk, cond, "left_anti")
             continue
@@ -2412,7 +2319,7 @@ def manifest_delete_where(
         uris = [
             r["uri"] for r in matched.select("uri").distinct().collect()
         ]
-        matched_rels = _uris_to_rels(uris, rels, path)
+        matched_rels = sorted(codec.rels_of_uris(uris, rels, path).values())
         if not matched_rels:
             return {"deleted_rows": 0, "files_matched": 0}
         return _delete_where_cow(
@@ -2426,7 +2333,7 @@ def manifest_delete_where(
     if n == 0:
         return {"deleted_rows": 0, "files_matched": 0}
     uris = [r["uri"] for r in matched.select("uri").distinct().collect()]
-    rel_of = _uris_to_rels_map(uris, rels, path)
+    rel_of = codec.rels_of_uris(uris, rels, path)
     mapping = spark.createDataFrame(
         [(u, rel_of[u]) for u in uris], "uri string, file string"
     )
@@ -2537,40 +2444,6 @@ def _maybe_consolidate_pos(
         "stages": sorted({_stage_of(r) for r in keep_files}),
     }
     return [*[e for e in deletes if e.get("kind") != "pos"], entry]
-
-
-def _uris_to_rels(uris: list[str], rels: list[str], path: str) -> list[str]:
-    return sorted(_uris_to_rels_map(uris, rels, path).values())
-
-
-def _uris_to_rels_map(
-    uris: list[str], rels: list[str], path: str
-) -> dict[str, str]:
-    """Map scan URIs (``_metadata.file_path``, scheme-qualified) back to
-    manifest-relative paths by exact suffix match against the live file
-    list — no URI-scheme or prefix format is ever assumed, and an
-    unmapped URI is a loud error (it would mean the scan read a file the
-    manifest does not list). O(|uris| + |rels|): candidates are indexed
-    by file NAME (unique in practice — Spark task UUIDs), the full-path
-    suffix check confirms; a wide delete over a 100k-file table must not
-    pay a quadratic driver loop here."""
-    by_name: dict[str, list[str]] = {}
-    for r in rels:
-        by_name.setdefault(r.rsplit("/", 1)[-1], []).append(r)
-    out: dict[str, str] = {}
-    for u in uris:
-        name = u.rsplit("/", 1)[-1]
-        hit = next(
-            (rel for rel in by_name.get(name, []) if u.endswith(f"/{rel}")),
-            None,
-        )
-        if hit is None:
-            raise RuntimeError(
-                f"scanned file {u} is not in the manifest's live list at "
-                f"{path} — manifest/scan drift"
-            )
-        out[u] = hit
-    return out
 
 
 def _delete_where_cow(
@@ -2770,7 +2643,7 @@ def manifest_update_where(
     uris = [r["uri"] for r in matched.select(
         F.col(_POS_FILE).alias("uri")
     ).distinct().collect()]
-    rel_of = _uris_to_rels_map(uris, rels, path)
+    rel_of = codec.rels_of_uris(uris, rels, path)
     matched_rels = sorted(rel_of.values())
 
     def transformed(src: DataFrame) -> DataFrame:
@@ -3005,8 +2878,7 @@ def manifest_upsert_partitioned(
     txn: "tuple[str, int] | None" = None,
     auto_compact_min_files: int | None = None,
 ) -> dict[str, int]:
-    """ATOMIC partition-level upsert: the scale-safe successor of
-    :func:`merge_upsert_partitioned` (reference semantic
+    """ATOMIC partition-level upsert (reference semantic
     ``function_app.py:305-312`` generalized to update+insert). Writes the
     merged content of every touched partition into an immutable staging
     directory, then publishes a new manifest with one exclusive-create
@@ -3353,61 +3225,36 @@ def _stage_and_commit(
     CALLER's gate (it must fall back to the eager path when any is
     due), and fast-forward must be off (a head compare would hydrate
     what the plan avoided)."""
-    import uuid
-
-    from data_management_service_run_etl_imputations_spark.session import (
-        ensure_runtime_confs,
-    )
-
-    # an injected vanilla session would otherwise write INT96 timestamps
-    # (no parquet column statistics -> footer ANALYZE degrades to a scan)
-    ensure_runtime_confs(merged.sparkSession)
-    stage = f"data/{uuid.uuid4().hex[:12]}"
     out_schema = merged.schema.simpleString()
     out_schema_json = merged.schema.json()
-    # partitionBy on a COPY of the partition column: the staging dir gets
-    # one subdir per value, while the real column stays in the data files
-    # (readers never depend on directory-name parsing).
     constraints = content.get("constraints") or {}
     obs = None
     if constraints:
         merged, obs = _observe_constraints(merged, constraints)
     pcols = _pcols(partition_col)
-    copies = _part_copy_cols(pcols)
-    merged = _with_part_copies(
-        merged, pcols
-    ).localCheckpoint()  # materialize once: count + write share it
-    if obs is not None:
-        # metrics rode the checkpoint job; abort BEFORE anything is staged
-        _check_observed_constraints(obs, path, op)
-    n_merged = merged.count()
-    staged = merged
-    if sort_cols:
+    n_merged = 0
+
+    def layout(frame: DataFrame, copies: list[str]) -> DataFrame:
+        nonlocal n_merged
+        frame = frame.localCheckpoint()  # count + write share it
+        if obs is not None:
+            # metrics rode the checkpoint job; abort BEFORE anything is staged
+            _check_observed_constraints(obs, path, op)
+        n_merged = frame.count()
+        if not sort_cols:
+            return frame
         # optimized write: contiguous (partition, sort key) ranges per
         # task -> every output file holds a narrow sort-key slice. The
         # range count pins the batch's existing parallelism (an explicit
         # N keeps AQE from coalescing the whole batch into one file).
-        nparts = max(1, merged.rdd.getNumPartitions())
-        staged = merged.repartitionByRange(
+        nparts = max(1, frame.rdd.getNumPartitions())
+        return frame.repartitionByRange(
             nparts, *copies, *sort_cols
         ).sortWithinPartitions(*copies, *sort_cols)
-    staged.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
-        f"{path}/{stage}"
+
+    staged = _stage_partitions(
+        path, merged, pcols, fmt, keys=touched_keys, op=op, layout=layout
     )
-    # resolve what Spark ACTUALLY wrote (escaped dir names decoded back
-    # to partition values) — the data-authoritative presence test: a
-    # touched key absent here was written zero rows, never mis-named
-    written = _staged_partition_dirs(path, stage, fmt, len(pcols))
-    stray = set(written) - set(touched_keys)
-    if stray:
-        raise RuntimeError(
-            f"{op} at {path} staged unexpected partition dirs {sorted(stray)[:3]} "
-            f"outside the touched set — partition-key mapping bug"
-        )
-    staged_files = {
-        k: written[k][1] if k in written else [] for k in touched_keys
-    }
-    staged_rel = {k: written[k][0] for k in written}
     carry = carry_files or {}
 
     # write-path index maintenance: once a table maintains zone-map
@@ -3416,7 +3263,7 @@ def _stage_and_commit(
     # files don't change across fast-forward rebuilds) and merged into
     # the sidecar per build. Bloom stays ANALYZE/compact-refreshed (a
     # bitset build is a real column scan, not metadata).
-    new_rels_flat = [e[0] for k in touched_keys for e in staged_files[k]]
+    new_rels_flat = [e[0] for _, es in staged.parts.values() for e in es]
     _fresh_stats_cache: dict = {}
 
     def _fresh_stats(cols_key: tuple, nc: dict) -> dict:
@@ -3431,25 +3278,9 @@ def _stage_and_commit(
         return _fresh_stats_cache[cols_key]
 
     def _build(base: dict) -> dict:
-        b_parts = dict(base.get("partitions", {}))
-        b_files = dict(base.get("files", {}))
-        dir_schemas = dict(base.get("dir_schemas", {}))
-        for k in touched_keys:
-            carried = carry.get(k, [])
-            if staged_files[k]:
-                rel = staged_rel[k]
-                b_parts[k] = rel
-                b_files[k] = [*carried, *staged_files[k]]
-                dir_schemas[rel] = out_schema
-            elif carried:
-                # file-granular rewrite emptied its slice but other files
-                # carry: the partition survives on its existing dir entry
-                b_files[k] = list(carried)
-            elif k in b_parts:
-                # every row of the partition was deleted by the rewrite
-                del b_parts[k]
-                b_files.pop(k, None)
-        live_dirs = _live_dirs({"partitions": b_parts, "files": b_files})
+        repointed = _repoint(base, staged, touched_keys, carry)
+        b_parts, b_files = repointed["partitions"], repointed["files"]
+        live_dirs = _live_dirs(repointed)
         # stats/bloom sidecars carry BY REFERENCE: the sidecar files are
         # immutable, and every loader intersects sidecar entries with the
         # manifest's live file list — entries for rewritten files go stale
@@ -3468,9 +3299,7 @@ def _stage_and_commit(
             "stats_cols": base.get("stats_cols", []),
             "bloom_ref": base.get("bloom_ref"),
             "deletes": base.get("deletes") or [],
-            "dir_schemas": {
-                d: sc for d, sc in dir_schemas.items() if d in live_dirs
-            },
+            "dir_schemas": repointed["dir_schemas"],
             **({"partition_cols": pcols} if len(pcols) != 1 else {}),
             **(extra_meta or {}),
         }
@@ -3488,9 +3317,8 @@ def _stage_and_commit(
                 if d in live_dirs
             }
             staged_names = _struct_field_names(out_schema)
-            for k in touched_keys:
-                if staged_files[k]:
-                    _record_dir_mapping(nc, staged_rel[k], staged_names)
+            for rel, _ in staged.parts.values():
+                _record_dir_mapping(nc, rel, staged_names)
         nc["deletes"] = _purge_dead_deletes(nc)
         if nc.get("stats_ref") and nc.get("stats_cols") and new_rels_flat:
             from data_management_service_run_etl_imputations_spark.sources.skipping import (
@@ -3529,15 +3357,13 @@ def _stage_and_commit(
     # recomputed by the caller against the winner's head.
     op_metrics = {
         "rows_staged": n_merged,
-        "partitions_rewritten": sum(
-            1 for k in touched_keys if staged_files[k]
-        ),
+        "partitions_rewritten": len(staged.parts),
         "partitions_dropped": sum(
             1
             for k in touched_keys
-            if not staged_files[k] and not carry.get(k)
+            if k not in staged.parts and not carry.get(k)
         ),
-        "files_added": sum(len(v) for v in staged_files.values()),
+        "files_added": len(new_rels_flat),
         "files_carried": sum(len(v) for v in carry.values()),
         **(op_metrics_extra or {}),
     }
@@ -3549,28 +3375,22 @@ def _stage_and_commit(
             content = _materialize(path, version)
             lazy_actions = False
     if lazy_actions:
-        parts_set: dict[str, str] = {}
-        files_set: dict[str, list] = {}
-        dirs_set: dict[str, str] = {}
-        for k in touched_keys:
-            carried = carry.get(k, [])
-            if staged_files[k]:
-                rel = staged_rel[k]
-                parts_set[k] = rel
-                files_set[k] = [*carried, *staged_files[k]]
-                dirs_set[rel] = out_schema
-            elif carried:
-                files_set[k] = list(carried)
-            else:  # pragma: no cover — touched keys come from staged rows
-                raise RuntimeError(
-                    f"{op} at {path}: touched partition {k!r} has neither "
-                    "staged nor carried files on the lazy commit path"
-                )
+        missing = [
+            k
+            for k in touched_keys
+            if k not in staged.parts and not carry.get(k)
+        ]
+        if missing:  # pragma: no cover — touched keys come from staged rows
+            raise RuntimeError(
+                f"{op} at {path}: touched partition(s) {missing[:3]} have "
+                "neither staged nor carried files on the lazy commit path"
+            )
+        delta = _repoint({}, staged, touched_keys, carry)
         actions = {
             "set": dict(extra_meta or {}),
-            "partitions.set": parts_set,
-            "files.set": files_set,
-            "dir_schemas.set": dirs_set,
+            "partitions.set": delta["partitions"],
+            "files.set": delta["files"],
+            "dir_schemas.set": delta["dir_schemas"],
         }
         for _ in range(16):
             try:
@@ -3940,8 +3760,6 @@ def _probe_matched_files(
     ``(matched_rels, matched_part_keys, n_live, n_candidates,
     exact_ran)``. A matched file is rewritten; every other file is
     carried by reference — Delta's rewrite-matched-files-only design."""
-    import os
-
     pcols = _pcols(partition_col)
     all_live = _live_file_rels(content, scope_parts)
     if not all_live:
@@ -3988,18 +3806,11 @@ def _probe_matched_files(
         .distinct()
         .collect()  # bounded: one row per matched data file
     )
-    root_abs = os.path.abspath(path)
-    matched_rels: set[str] = set()
-    matched_parts: set[str] = set()
-    for r in rows:
-        uri = r["__file"]
-        idx = uri.find(root_abs)
-        matched_rels.add(
-            uri[idx + len(root_abs) + 1 :] if idx >= 0 else uri
-        )
-        matched_parts.add(
-            _part_key_tuple([r[n] for n in pv_names], pcols)
-        )
+    rel_of = codec.rels_of_uris([r["__file"] for r in rows], cand, path)
+    matched_rels = set(rel_of.values())
+    matched_parts = {
+        _part_key_tuple([r[n] for n in pv_names], pcols) for r in rows
+    }
     return matched_rels, matched_parts, len(all_live), len(cand), True
 
 
@@ -4580,7 +4391,7 @@ def manifest_compact(
 
     Returns {"partitions": n, "files_before": n, "files_after": n}.
     """
-    import uuid
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     version, content = _latest_manifest(path)
     if version == 0:
@@ -4635,66 +4446,68 @@ def manifest_compact(
         ),
         content,
     )
-    stage = f"data/{uuid.uuid4().hex[:12]}"
-    copies = _part_copy_cols(pcols)
     data_cols = list(df.columns)
-    with_copies = _with_part_copies(df, pcols)
-    if target_file_mb is None:
-        # one output file per partition: repartition BY the partition
-        # value, so every partition's rows land in exactly one task.
-        # Unpartitioned table (no copy columns): the whole table IS the
-        # one partition — a single task writes the one output file.
-        staged = (
-            with_copies.repartition(*[F.col(c) for c in copies])
-            if copies
-            else with_copies.repartition(1)
-        )
-    elif not copies:
-        # unpartitioned bounded-size fan-out: one partition, salt only
+
+    def layout(with_copies: DataFrame, copies: list[str]) -> DataFrame:
+        if target_file_mb is None:
+            # one output file per partition: repartition BY the partition
+            # value, so every partition's rows land in exactly one task.
+            # Unpartitioned table (no copy columns): the whole table IS
+            # the one partition — a single task writes the one output file.
+            return (
+                with_copies.repartition(*[F.col(c) for c in copies])
+                if copies
+                else with_copies.repartition(1)
+            )
         import math as _math
 
         tgt = max(1, int(target_file_mb)) << 20
-        sz = sum(e[1] for k in selected for e in files.get(k, []))
-        fan = _math.ceil(sz / tgt) or 1
-        staged = (
-            with_copies.withColumn(
-                "__salt", F.pmod(F.xxhash64(*data_cols), F.lit(fan))
+        if not copies:
+            # unpartitioned bounded-size fan-out: one partition, salt only
+            sz = sum(e[1] for k in selected for e in files.get(k, []))
+            fan = _math.ceil(sz / tgt) or 1
+            return (
+                with_copies.withColumn(
+                    "__salt", F.pmod(F.xxhash64(*data_cols), F.lit(fan))
+                )
+                .repartition(
+                    max(fan, spark.sparkContext.defaultParallelism),
+                    F.col("__salt"),
+                )
+                .drop("__salt")
             )
-            .repartition(
-                max(fan, spark.sparkContext.defaultParallelism),
-                F.col("__salt"),
-            )
-            .drop("__salt")
-        )
-    else:
         # bounded-size fan-out: per-partition output file count from the
-        # manifest's recorded byte sizes (zero data read), joined in as
-        # a broadcast and turned into a row-hash salt — the rewrite of a
-        # large partition runs across fan tasks and emits fan files
+        # manifest's recorded byte sizes (zero data read), joined in on
+        # the partition values as a broadcast and turned into a row-hash
+        # salt — the rewrite of a large partition runs across fan tasks
+        # and emits fan files
         import json as _fan_json
-        import math as _math
 
-        tgt = max(1, int(target_file_mb)) << 20
-
-        def _comps(k: str) -> list:
-            raw = [k] if len(pcols) == 1 else _fan_json.loads(k)
-            return [None if c == NULL_PARTITION_KEY else c for c in raw]
-
+        types = [df.schema[c].dataType for c in pcols]
         fan_rows = []
         for k in selected:
+            comps = [k] if len(pcols) == 1 else _fan_json.loads(k)
             sz = sum(e[1] for e in files.get(k, []))
-            fan_rows.append((*_comps(k), _math.ceil(sz / tgt) or 1))
+            fan_rows.append(
+                (
+                    *[codec.key_value(c, t) for c, t in zip(comps, types)],
+                    _math.ceil(sz / tgt) or 1,
+                )
+            )
         f_names = [f"__f{i}" for i in range(len(pcols))]
         fan_df = spark.createDataFrame(
             fan_rows,
-            ", ".join(f"{n} STRING" for n in f_names) + ", __fan INT",
+            StructType(
+                [StructField(n, t) for n, t in zip(f_names, types)]
+                + [StructField("__fan", IntegerType())]
+            ),
         )
         cond = None
-        for c, fn in zip(copies, f_names):
+        for c, fn in zip(pcols, f_names):
             e = with_copies[c].eqNullSafe(fan_df[fn])
             cond = e if cond is None else cond & e
         total_fan = sum(r[-1] for r in fan_rows)
-        staged = (
+        return (
             with_copies.join(F.broadcast(fan_df), cond, "left")
             .withColumn(
                 "__salt",
@@ -4709,58 +4522,31 @@ def manifest_compact(
             )
             .drop("__salt", "__fan", *f_names)
         )
-    staged.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
-        f"{path}/{stage}"
+
+    staged = _stage_partitions(
+        path, df, pcols, fmt, keys=selected, op="compact", layout=layout
     )
-    dir_schemas: dict = dict(content.get("dir_schemas", {}))
-    new_schema = staged.drop(*copies).schema.simpleString()
-    # resolve the dirs Spark ACTUALLY wrote (escaped names decoded) — a
-    # partition absent here was written zero rows, never merely named
-    # differently than the hand-built ``__p={k}`` guess
-    written = _staged_partition_dirs(path, stage, fmt, len(pcols))
-    stray = set(written) - set(selected)
-    if stray:
-        raise RuntimeError(
-            f"compact at {path} staged unexpected partition dirs "
-            f"{sorted(stray)[:3]} — partition-key mapping bug"
-        )
     # every old live file of the selected partitions is being replaced —
     # capture the set BEFORE repointing so their index entries drop
     old_rels = {e[0] for k in selected for e in files.get(k, [])}
-    for k in selected:
-        if k in written:
-            rel, staged_list = written[k]
-            parts[k] = rel
-            files[k] = staged_list
-            dir_schemas[rel] = new_schema
-        else:
-            # materializing pending MoR deletes emptied the partition:
-            # drop it from the manifest (same as _stage_and_commit)
-            parts.pop(k, None)
-            files.pop(k, None)
-    live_dirs = _live_dirs({"partitions": parts, "files": files})
     pre_compact = content  # index sidecars load against the OLD live set
-    content = dict(content)
-    content["partitions"] = parts
-    content["files"] = files
-    content["dir_schemas"] = {
-        d: sc for d, sc in dir_schemas.items() if d in live_dirs
-    }
+    # materializing pending MoR deletes can empty a partition: it drops
+    content = {**content, **_repoint(content, staged, selected)}
+    files = content["files"]
+    new_schema = staged.schema
     if content.get("col_ids"):
+        live_dirs = _live_dirs(content)
         content["dir_col_ids"] = {
             d: m
             for d, m in content.get("dir_col_ids", {}).items()
             if d in live_dirs
         }
-        for k in selected:
-            if k in written:
-                _record_dir_mapping(
-                    content, written[k][0], _struct_field_names(new_schema)
-                )
+        for rel, _ in staged.parts.values():
+            _record_dir_mapping(
+                content, rel, _struct_field_names(new_schema)
+            )
     content["deletes"] = _purge_dead_deletes(content)
-    new_rels = [
-        e[0] for k in selected if k in written for e in written[k][1]
-    ]
+    new_rels = [e[0] for _, es in staged.parts.values() for e in es]
     if refresh_indexes and new_rels:
         # keep the index sidecars WARM across the rewrite, committed
         # atomically with the data they index (zorder's pattern): stats
@@ -5063,8 +4849,6 @@ def manifest_replace_partitions(
     returns zero counts with ``"skipped": True``.
     Returns {"partitions_written": n, "partitions_dropped": n}.
     """
-    import uuid
-
     spark = df.sparkSession
     version, content = _latest_manifest(path)
     if txn is not None and _txn_applied(content, txn):
@@ -5073,59 +4857,41 @@ def manifest_replace_partitions(
             "partitions_dropped": 0,
             "skipped": True,
         }
-    parts: dict = dict(content.get("partitions", {}))
-    files: dict = dict(content.get("files", {}))
     pcols = _pcols(partition_col)
     wanted = [_normalize_partition_value(v, pcols) for v in partition_values]
     gen = content.get("generated_cols") or {}
     if gen:
         df = _apply_generated(df, gen)
 
-    stage = f"data/{uuid.uuid4().hex[:12]}"
-    out_schema = df.schema.simpleString()
     out_schema_json = df.schema.json()
     constraints = content.get("constraints") or {}
     obs = None
     if constraints:
         df, obs = _observe_constraints(df, constraints)
-    staged = _with_part_copies(df, pcols).localCheckpoint()
-    if obs is not None:
-        _check_observed_constraints(obs, path, "replace-partitions")
-    copies = _part_copy_cols(pcols)
-    staged.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
-        f"{path}/{stage}"
+
+    def layout(frame: DataFrame, copies: list[str]) -> DataFrame:
+        frame = frame.localCheckpoint()
+        if obs is not None:
+            _check_observed_constraints(obs, path, "replace-partitions")
+        return frame
+
+    # the stray-key guard: staged data landing in a partition the caller
+    # did not list means partition_values came from a DIFFERENT
+    # evaluation or state than the staged frame (e.g. before generated-
+    # column application)
+    staged = _stage_partitions(
+        path, df, pcols, fmt, keys=wanted, op="replace-partitions",
+        layout=layout,
     )
-    staged_dirs = _staged_partition_dirs(path, stage, fmt, len(pcols))
-    stray = set(staged_dirs) - set(wanted)
-    if stray:
-        # same guard as _stage_and_commit: the staged data landing in a
-        # partition the caller did not list means the caller computed
-        # partition_values from a DIFFERENT evaluation or state than
-        # the staged frame (e.g. before generated-column application) —
-        # the old silent behavior dropped those rows on the floor
-        raise RuntimeError(
-            f"replace-partitions at {path} staged unexpected partition "
-            f"dirs {sorted(stray)[:3]} outside the listed set — "
-            "partition_values disagree with the staged data"
-        )
-    written = dropped = 0
-    dir_schemas: dict = dict(content.get("dir_schemas", {}))
-    for k in wanted:
-        if k in staged_dirs:
-            rel, listed = staged_dirs[k]
-            parts[k] = rel
-            files[k] = listed
-            dir_schemas[rel] = out_schema
-            written += 1
-        elif k in parts:
-            del parts[k]
-            files.pop(k, None)
-            dropped += 1
-    dir_schemas = {
-        d: sc
-        for d, sc in dir_schemas.items()
-        if d in _live_dirs({"partitions": parts, "files": files})
-    }
+    written = sum(1 for k in wanted if k in staged.parts)
+    dropped = sum(
+        1
+        for k in wanted
+        if k not in staged.parts and k in content.get("partitions", {})
+    )
+    repointed = _repoint(content, staged, wanted)
+    parts, files = repointed["partitions"], repointed["files"]
+    out_schema = staged.schema
     new_content = {
         "partitions": parts,
         "files": files,
@@ -5144,27 +4910,22 @@ def manifest_replace_partitions(
                 "deletes": content.get("deletes") or [],
             }
         ),
-        "dir_schemas": dir_schemas,
+        "dir_schemas": repointed["dir_schemas"],
     }
     for k, v in content.items():
         new_content.setdefault(k, v)
     if new_content.get("col_ids"):
-        live = _live_dirs({"partitions": parts, "files": files})
+        live = _live_dirs(repointed)
         new_content["dir_col_ids"] = {
             d: m
             for d, m in new_content.get("dir_col_ids", {}).items()
             if d in live
         }
-        for k in wanted:
-            if k in staged_dirs:
-                _record_dir_mapping(
-                    new_content,
-                    staged_dirs[k][0],
-                    _struct_field_names(out_schema),
-                )
-    new_rels = [
-        e[0] for k in wanted if k in staged_dirs for e in staged_dirs[k][1]
-    ]
+        for rel, _ in staged.parts.values():
+            _record_dir_mapping(
+                new_content, rel, _struct_field_names(out_schema)
+            )
+    new_rels = [e[0] for _, es in staged.parts.values() for e in es]
     if new_content.get("stats_ref") and new_rels:
         # same write-path maintenance as _stage_and_commit: a stats-
         # maintained table's replace covers its own output files from
@@ -6416,8 +6177,6 @@ def manifest_replace_table(
     first; the single manifest commit that references it IS the swap —
     readers of the old head never see a partial state, and a concurrent
     committer loses with a loud :class:`CommitConflict`."""
-    import uuid
-
     version, content = _latest_manifest(path)
     pcols = _pcols(partition_cols) if partition_cols else []
     missing = [p for p in pcols if p not in df.columns]
@@ -6426,33 +6185,30 @@ def manifest_replace_table(
             f"PARTITIONED BY column(s) {missing} are not produced by the "
             f"replacement data (have {df.columns})"
         )
-    stage = f"data/{uuid.uuid4().hex[:12]}"
-    out_schema = df.schema.simpleString()
     out_schema_json = df.schema.json()
-    if pcols:
-        staged = _with_part_copies(df, pcols).localCheckpoint()
-        copies = _part_copy_cols(pcols)
-        staged.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
-            f"{path}/{stage}"
-        )
-    else:
-        df.write.mode("overwrite").format(fmt).save(f"{path}/{stage}")
-    staged_dirs = _staged_partition_dirs(path, stage, fmt, len(pcols))
-    parts = {k: rel for k, (rel, _) in staged_dirs.items()}
-    files = {k: listed for k, (_, listed) in staged_dirs.items()}
+    staged = _stage_partitions(
+        path,
+        df,
+        pcols,
+        fmt,
+        op="replace-table",
+        layout=(lambda frame, _: frame.localCheckpoint()) if pcols else None,
+    )
+    repointed = _repoint({}, staged, staged.parts)
+    parts, files = repointed["partitions"], repointed["files"]
     new_content = {
         "partitions": parts,
         "files": files,
         "fmt": fmt,
         "partition_col": pcols[0] if len(pcols) == 1 else None,
         **({"partition_cols": pcols} if len(pcols) != 1 else {}),
-        "schema": out_schema,
+        "schema": staged.schema,
         "schema_json": out_schema_json,
         "stats_ref": None,
         "stats_cols": [],
         "bloom_ref": None,
         "deletes": [],
-        "dir_schemas": {rel: out_schema for rel in parts.values()},
+        "dir_schemas": repointed["dir_schemas"],
     }
     for k in ("stream_batches", "txns"):
         if content.get(k):

@@ -63,6 +63,9 @@ import uuid
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_management_service_run_etl_imputations_spark.sources import (
+    partition_codec as codec,
+)
 from data_management_service_run_etl_imputations_spark.sources.sinks import (
     _apply_deletes,
     _has_pos_deletes,
@@ -71,8 +74,9 @@ from data_management_service_run_etl_imputations_spark.sources.sinks import (
     _live_file_rels,
     _load_table_files,
     _publish_manifest,
+    _repoint,
     _resolve_manifest,
-    _staged_partition_dirs,
+    _stage_partitions,
 )
 
 __all__ = [
@@ -444,13 +448,13 @@ def _stats_for_files(
         .agg(*aggs)
         .collect()  # bounded: one row per data FILE
     )
-    root_abs = os.path.abspath(table_root)
+    rel_of = codec.rels_of_uris(
+        [r["__file"] for r in rows], file_rels, table_root
+    )
     out: dict[str, dict] = {}
     for r in rows:
         d = r.asDict()
-        uri = d["__file"]
-        idx = uri.find(root_abs)
-        frel = uri[idx + len(root_abs) + 1 :] if idx >= 0 else uri
+        frel = rel_of[d["__file"]]
         col_stats = {
             c: {
                 "min": _json_safe(d[f"__min_{c}"], side="min"),
@@ -770,9 +774,7 @@ def manifest_cluster_zorder(
         return {"partitions": 0, "files": 0}
     from data_management_service_run_etl_imputations_spark.sources.sinks import (
         _normalize_partition_value,
-        _part_copy_cols,
         _partition_cols,
-        _with_part_copies,
     )
 
     fmt = content.get("fmt", "parquet")
@@ -801,8 +803,6 @@ def manifest_cluster_zorder(
         ),
         content,
     )
-    dfz = with_zorder(df, zorder_cols, bits_per_col=bits_per_col)
-    copies = _part_copy_cols(pcols)
     if target_file_mb is not None:
         import math
 
@@ -814,59 +814,40 @@ def manifest_cluster_zorder(
         )
     else:
         n_ranges = max(1, files_per_partition * len(selected))
-    staged = (
-        _with_part_copies(dfz, pcols)
-        # contiguous (partition, z) ranges per task: each output file holds
-        # one narrow z-slice of (almost always) one partition
-        .repartitionByRange(
-            n_ranges, *copies, "__z"
+
+    def layout(frame: DataFrame, copies: list[str]) -> DataFrame:
+        # contiguous (partition, z) ranges per task: each output file
+        # holds one narrow z-slice of (almost always) one partition
+        return (
+            with_zorder(frame, zorder_cols, bits_per_col=bits_per_col)
+            .repartitionByRange(n_ranges, *copies, "__z")
+            .sortWithinPartitions(*copies, "__z")
+            .drop("__z")
         )
-        .sortWithinPartitions(*copies, "__z")
-        .drop("__z")
-    )
-    stage = f"data/{uuid.uuid4().hex[:12]}"
-    staged.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
-        f"{path}/{stage}"
+
+    # materializing pending MoR deletes can empty a partition entirely —
+    # the re-point drops it
+    staged = _stage_partitions(
+        path, df, pcols, fmt, keys=selected, op="optimize-zorder",
+        layout=layout,
     )
 
     # stats surviving on unrewritten files (loaded against the OLD live
     # set) merge with fresh stats for the rewritten partitions into a new
     # sidecar, committed atomically with the data it indexes
     stats = _load_stats_sidecar(path, content)
-    dir_schemas: dict = dict(content.get("dir_schemas", {}))
-    new_schema = staged.drop(*copies).schema.simpleString()
     # every OLD live file of the selected partitions is being replaced
     # (incl. files a file-granular merge carried into other stages) —
     # capture the set BEFORE repointing so their stale stats drop
     old_rels = {e[0] for k in selected for e in files.get(k, [])}
-    # resolve what Spark actually wrote (escaped dir names decoded);
-    # materializing pending MoR deletes can empty a partition entirely —
-    # it must DROP, not point at a never-created directory
-    written = _staged_partition_dirs(path, stage, fmt, len(pcols))
-    new_file_rels: list[str] = []
-    for k in selected:
-        if k in written:
-            rel, listed = written[k]
-            parts[k] = rel
-            files[k] = listed
-            dir_schemas[rel] = new_schema
-            new_file_rels.extend(e[0] for e in listed)
-        else:
-            parts.pop(k, None)
-            files.pop(k, None)
+    new_file_rels = [e[0] for _, es in staged.parts.values() for e in es]
     for frel in old_rels:
         stats.pop(frel, None)
     fresh = _collect_stats(
         spark, path, new_file_rels, zorder_cols, {"fmt": fmt}
     )
     stats.update(fresh)
-    content = dict(content)
-    content["partitions"] = parts
-    content["files"] = files
-    live = _live_dirs({"partitions": parts, "files": files})
-    content["dir_schemas"] = {
-        d: sc for d, sc in dir_schemas.items() if d in live
-    }
+    content = {**content, **_repoint(content, staged, selected)}
     if content.get("col_ids"):
         # column mapping: the fresh dirs must record their column ids —
         # an unmapped dir written AFTER mapping initialization would
@@ -876,16 +857,16 @@ def manifest_cluster_zorder(
             _struct_field_names,
         )
 
+        live = _live_dirs(content)
         content["dir_col_ids"] = {
             d: m
             for d, m in content.get("dir_col_ids", {}).items()
             if d in live
         }
-        for k in selected:
-            if k in written:
-                _record_dir_mapping(
-                    content, written[k][0], _struct_field_names(new_schema)
-                )
+        for rel, _ in staged.parts.values():
+            _record_dir_mapping(
+                content, rel, _struct_field_names(staged.schema)
+            )
     content["stats_ref"] = _write_stats_sidecar(path, stats)
     content["stats_cols"] = sorted(
         set(content.get("stats_cols", [])) | set(zorder_cols)
@@ -1024,13 +1005,13 @@ def _bloom_file_entries(
         .agg(F.collect_set("__pos").alias("__set"))
         .collect()
     )
-    root_abs = os.path.abspath(table_root)
+    rel_of = codec.rels_of_uris(
+        [r["__file"] for r in rows], file_rels, table_root
+    )
     n_words = (bits + 63) // 64
     out: dict[str, dict] = {}
     for r in rows:
-        uri = r["__file"]
-        idx = uri.find(root_abs)
-        frel = uri[idx + len(root_abs) + 1 :] if idx >= 0 else uri
+        frel = rel_of[r["__file"]]
         words = [0] * n_words
         for pos in r["__set"]:
             words[pos >> 6] |= 1 << (pos & 63)

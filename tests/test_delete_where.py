@@ -37,11 +37,6 @@ from data_management_service_run_etl_imputations_spark.sources.sinks import (
 )
 
 
-# r13 driver-window tier: this file is in the SLOW families (measured
-# from the full-suite durations log); deselect with -m "not slow".
-pytestmark = pytest.mark.slow
-
-
 @pytest.fixture()
 def table_path():
     path = f"{tempfile.gettempdir()}/mdw_{uuid.uuid4().hex[:12]}"

@@ -3,9 +3,9 @@ INSERT/CTAS path stages with Spark's native parquet writer and commits
 through ManifestAppendWriter's own loop — no create-data-source worker,
 no per-partition Python write tasks — while staying byte-identical to
 the DataSource writer in manifest content: same op/op_metrics history
-record, same partition keys, same empty-write no-op, and a loud
-fallback to the Python writer when a partition-column type is outside
-the key-identical set."""
+record, same partition keys, same empty-write no-op, and a fallback to the
+Python writer when a partition-column type has no partition-key
+encoding."""
 
 from __future__ import annotations
 
@@ -147,12 +147,13 @@ def test_null_partition_value_key(spark, table_path, monkeypatch):
     assert got == [(1, None), (2, "d0")]
 
 
-def test_boolean_partition_falls_back_to_python_writer(
+def test_boolean_partition_takes_fast_path_with_writer_keys(
     spark, table_path, monkeypatch
 ):
     """bool keys format differently across the two engines ('True' vs
-    'true'): the fast path must refuse and the DataSource writer keep
-    the established str(value) keys."""
+    'true'): the partition codec decodes the staged 'true'/'false'
+    directories to the DataSource writer's str(value) keys, so the fast
+    path takes boolean partitions."""
     calls = _spy(monkeypatch)
     view = f"fsa_{uuid.uuid4().hex[:8]}"
     manifest_sql(
@@ -160,7 +161,7 @@ def test_boolean_partition_falls_back_to_python_writer(
         f"CREATE TABLE {view} LOCATION '{table_path}' PARTITIONED BY "
         "(flag) AS SELECT id AS k, id % 2 = 0 AS flag FROM range(4)",
     )
-    assert calls["n"] == 1 and calls["taken"] == 0
+    assert calls["n"] == 1 and calls["taken"] == 1
     _, content = _latest_manifest(table_path)
     # Python-writer convention: str(True)/str(False)
     assert sorted(content["partitions"]) == ["False", "True"]

@@ -1,9 +1,9 @@
 """Manifest-committed partitioned table: atomic upsert visibility.
 
-The judge-flagged gap (VERDICT r03 #2): merge_upsert_partitioned's dynamic
-partition overwrite lets a concurrent reader observe a partially-rewritten
-partition set. manifest_upsert_partitioned publishes each version with one
-atomic rename, so these tests pin the ACID story: a reader resolved on
+Rewriting partition directories in place (dynamic partition overwrite)
+lets a concurrent reader observe a partially-rewritten partition set.
+manifest_upsert_partitioned publishes each version with one atomic
+rename, so these tests pin the ACID story: a reader resolved on
 version N sees exactly version N forever (data dirs are immutable); a
 writer crash before the manifest rename is invisible; vacuum only removes
 unreferenced directories.
@@ -25,11 +25,6 @@ from data_management_service_run_etl_imputations_spark.sources.sinks import (
     manifest_upsert_partitioned,
     manifest_vacuum,
 )
-
-
-# r13 driver-window tier: this file is in the SLOW families (measured
-# from the full-suite durations log); deselect with -m "not slow".
-pytestmark = pytest.mark.slow
 
 
 @pytest.fixture()

@@ -21,6 +21,9 @@ from data_management_service_run_etl_imputations_spark.sources.manifest_batch im
     manifest_sql_unregister,
 )
 from data_management_service_run_etl_imputations_spark.sources.sinks import (
+    _latest_manifest,
+    _publish_manifest,
+    manifest_add_column,
     manifest_delete_where,
     manifest_upsert_partitioned,
 )
@@ -129,6 +132,34 @@ def test_evolved_table_keeps_datasource_binding(spark, table_path):
     got = _rows(spark, view)
     assert (100, "x", "noted") in got
     assert sum(1 for r in got if r[2] is None) == 5  # null-filled old rows
+    manifest_sql_unregister(spark, view)
+
+
+def test_dir_without_recorded_schema_keeps_datasource_binding(
+    spark, table_path
+):
+    """A live dir with no recorded write schema (a manifest from before
+    per-dir schemas) is not proven to match the table schema, so the
+    native binding must refuse it and the DataSource null-fills."""
+    manifest_upsert_partitioned(
+        spark.createDataFrame(
+            [(i, f"d{i % 2}") for i in range(4)], "k LONG, day STRING"
+        ),
+        table_path,
+        ["k"],
+        "day",
+    )
+    manifest_add_column(table_path, "note", "STRING")
+    version, content = _latest_manifest(table_path)
+    _publish_manifest(
+        table_path, version + 1, {**content, "dir_schemas": {}}, op="test"
+    )
+    view = f"nsr_{uuid.uuid4().hex[:8]}"
+    manifest_sql_register(spark, view, table_path)
+    assert "(Python)" in _plan(spark, view)
+    assert _rows(spark, view) == [
+        (0, "d0", None), (1, "d1", None), (2, "d0", None), (3, "d1", None)
+    ]
     manifest_sql_unregister(spark, view)
 
 

@@ -187,78 +187,6 @@ def test_approx_count_distinct_within_tolerance(spark, sf_dir):
         assert abs(r.approx - r.exact) / r.exact < 0.05, (r.l_returnflag, r.approx, r.exact)
 
 
-def test_merge_upsert_updates_and_inserts(spark, tmp_path):
-    from data_management_service_run_etl_imputations_spark.sources.sinks import (
-        merge_upsert,
-    )
-
-    path = str(tmp_path / "fact_upsert")
-    first = spark.createDataFrame(
-        [(1, "2024-01-01", 5.0), (2, "2024-01-01", 6.0)],
-        "empleado_id INT, fecha STRING, horas DOUBLE",
-    )
-    assert merge_upsert(first, path, ["empleado_id", "fecha"]) == {
-        "updated": 0, "inserted": 2,
-    }
-    second = spark.createDataFrame(
-        [(2, "2024-01-01", 9.5), (3, "2024-01-02", 7.0)],
-        "empleado_id INT, fecha STRING, horas DOUBLE",
-    )
-    assert merge_upsert(second, path, ["empleado_id", "fecha"]) == {
-        "updated": 1, "inserted": 1,
-    }
-    rows = {(r.empleado_id, r.fecha): r.horas
-            for r in spark.read.parquet(path).collect()}
-    assert rows == {(1, "2024-01-01"): 5.0, (2, "2024-01-01"): 9.5,
-                    (3, "2024-01-02"): 7.0}
-
-
-def test_merge_upsert_partitioned_rewrites_only_touched(spark, tmp_path):
-    """Dynamic-partition-overwrite upsert: untouched partitions keep their
-    exact files (same names, same bytes); only the batch's partitions are
-    rewritten. This is the scale path merge_upsert's docstring points to."""
-    import os
-
-    from data_management_service_run_etl_imputations_spark.sources.sinks import (
-        merge_upsert_partitioned,
-    )
-
-    path = str(tmp_path / "fact_part")
-    first = spark.createDataFrame(
-        [(1, "2024-01-01", 5.0), (2, "2024-01-01", 6.0),
-         (3, "2024-01-02", 7.0), (4, "2024-01-03", 8.0)],
-        "empleado_id INT, fecha STRING, horas DOUBLE",
-    )
-    assert merge_upsert_partitioned(
-        first, path, ["empleado_id", "fecha"], "fecha"
-    ) == {"updated": 0, "inserted": 4}
-
-    def files_of(day):
-        d = os.path.join(path, f"fecha={day}")
-        return {
-            f: os.path.getmtime(os.path.join(d, f))
-            for f in os.listdir(d) if f.endswith(".parquet")
-        }
-
-    untouched_before = files_of("2024-01-02"), files_of("2024-01-03")
-
-    batch = spark.createDataFrame(
-        [(2, "2024-01-01", 9.5), (5, "2024-01-01", 1.0)],
-        "empleado_id INT, fecha STRING, horas DOUBLE",
-    )
-    assert merge_upsert_partitioned(
-        batch, path, ["empleado_id", "fecha"], "fecha"
-    ) == {"updated": 1, "inserted": 1}
-
-    assert (files_of("2024-01-02"), files_of("2024-01-03")) == untouched_before
-    # partition dir values are type-inferred on read-back → stringify
-    rows = {(r.empleado_id, str(r.fecha)): r.horas
-            for r in spark.read.parquet(path).collect()}
-    assert rows == {(1, "2024-01-01"): 5.0, (2, "2024-01-01"): 9.5,
-                    (5, "2024-01-01"): 1.0, (3, "2024-01-02"): 7.0,
-                    (4, "2024-01-03"): 8.0}
-
-
 def test_route_expectations_partitions_input(spark):
     """Quarantine routing: pass + quarantine partition the input exactly;
     quarantined rows carry the names of every failed rule; a NULL rule

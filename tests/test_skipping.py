@@ -33,11 +33,6 @@ from data_management_service_run_etl_imputations_spark.sources.skipping import (
 )
 
 
-# r13 driver-window tier: this file is in the SLOW families (measured
-# from the full-suite durations log); deselect with -m "not slow".
-pytestmark = pytest.mark.slow
-
-
 @pytest.fixture()
 def table(spark, tmp_path):
     """A 4-partition manifest table with two independent uniform columns —
